@@ -7,48 +7,70 @@ on a ``readStream`` DataFrame — streaming/test coverage replays these
 against files and asserts batch equivalence (tests/test_streaming.py).
 That equivalence is the correctness argument Structured Streaming is
 built on (stream = unbounded table).
+
+The ``q_stream_*_replay`` queries put that argument under the oracle
+gate: each takes a bounded input slice, cuts it into micro-batches and
+hands it, with its streaming transform, to ``streaming.core.replay``,
+which stages the batches, runs the stream in the caller's session and
+cleans up. A query keeps only its slice, its batch cut, its transform
+and the projection of the replay's result.
 """
 
 from __future__ import annotations
 
-import os
+import datetime
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl4s_spark.queries import query
 from etl4s_spark.sources.tables import load_table
+from etl4s_spark.streaming.core import (
+    even_batches,
+    replay,
+    stateful_dedup,
+    stateful_running_agg,
+    stream_stream_join,
+)
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 _DUCK_FMT = "%Y-%m-%d %H:%M:%S.%f"
 
 
-def _stream_parts() -> str:
-    """Shuffle/state partition count for the bounded replay streams.
-    State-store commit cost is per (micro-batch × partition) and the
-    replayed slices are bounded by construction (every replay filters
-    event_id < 20000), so a SMALL fixed count wins locally: r13 probes
-    read 8 partitions ≈ 1.85 s vs 2 partitions ≈ 1.6-1.8 s per replay
-    with identical results (complete-mode final state is partition-count
-    independent). A cluster deployment sizes this to key cardinality via
-    SPARK_GRAFT_STREAM_SHUFFLE — the local default is NOT a throughput
-    setting, it bounds per-batch fixed cost."""
-    return os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "2")
+def _exact_total():
+    """Sum of ``value`` carried as a 6-dp decimal, rounded to 4 dp: the
+    micro-batch accumulation order cannot move the result."""
+    return F.round(
+        F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
+    ).alias("total_value")
 
 
-def _replay_tmpdir(prefix: str) -> str:
-    """Scratch dir for staged replay micro-batch files (and upsert/bitmap
-    sink targets). Prefer the tmpfs over disk-backed /tmp: the files are
-    bounded by construction (every replay slices event_id < 20000), live
-    only for the duration of one query, and the file-stream source
-    re-reads them once per micro-batch. SPARK_GRAFT_REPLAY_TMP overrides
-    (e.g. a cluster's fast scratch mount)."""
-    import tempfile
+def _late_sentinel(tbl: pa.Table) -> tuple[pa.Table, datetime.datetime]:
+    """One '__sentinel' event 2 h past the slice's max ts, and that max.
+    Staged as the last micro-batch it pushes the watermark past every real
+    window, and the trailing no-data micro-batch makes append mode emit
+    them all. On an empty slice the max is NULL: any fixed base works, the
+    sentinel only advances the watermark past (nonexistent) data."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    root = os.environ.get("SPARK_GRAFT_REPLAY_TMP") or (
-        "/dev/shm" if os.path.isdir("/dev/shm") else None
-    )
-    return tempfile.mkdtemp(prefix=prefix, dir=root)
+    mx_ts = pc.max(tbl["ts"]).as_py() or datetime.datetime(2024, 1, 1)
+    types = {f.name: f.type for f in tbl.schema}
+    sentinel = pa.table(
+        {
+            "event_id": pa.array([-1], types["event_id"]),
+            "ts": pa.array([mx_ts + datetime.timedelta(hours=2)], types["ts"]),
+            "user_id": pa.array([-1], types["user_id"]),
+            "event_type": pa.array(["__sentinel"], types["event_type"]),
+            "value": pa.array([0.0], types["value"]),
+            "props": pa.array(["{}"], types["props"]),
+        }
+    ).select(tbl.schema.names)
+    return sentinel, mx_ts
 
 
 @query(
@@ -138,87 +160,34 @@ def q_window_sliding_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_tumbling_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ACTUALLY-STREAMED tumbling windows: events are re-materialized as
-    a multi-file directory, replayed through a file-source stream in
-    paced micro-batches into an in-memory complete-mode sink, and the
-    final state is proven equal to the one-shot SQL aggregation — the
-    stream-is-an-unbounded-table guarantee, checked by the oracle gate
-    itself rather than only by pytest.
+    """ACTUALLY-STREAMED tumbling windows: events replay through a file
+    stream in four paced micro-batches (streaming/core.py replay) into
+    a complete-mode memory sink, and the final state is proven equal to
+    the one-shot SQL aggregation — the stream-is-an-unbounded-table
+    guarantee, checked by the oracle gate itself rather than only by
+    pytest.
 
     Sums are carried as decimals so the micro-batch accumulation order
     cannot move the rounded result. The replayed slice is BOUNDED
     (event_id < 20000, like every other replay): the stream-equals-batch
     proof needs micro-batch structure, not corpus volume — an unbounded
     driver-side staging would grow linearly with sf."""
-    import shutil
-    import tempfile
-    import uuid
-
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_stream_replay_")
-    # one Spark scan; 4 ordered micro-batch files staged driver-side
-    tbl = ev.toArrow()
-    n = tbl.num_rows
-    step = (n + 3) // 4
-    _stage_replay_files([tbl.slice(i * step, step) for i in range(4)], replay_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
+    # one Spark scan; 4 ordered micro-batches staged driver-side
+    sink = replay(
+        spark,
+        even_batches(ev.toArrow(), 4),
+        lambda s: s.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type").agg(
+            F.count(F.lit(1)).alias("n_events"), _exact_total()
+        ),
+        output_mode="complete",
     )
-    agg = (
-        stream.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
-            ).alias("total_value"),
-        )
-    )
-    sink = f"replay_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            # the memory sink holds the rows; the replay files are dead weight
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return (
-        spark.table(sink)
-        .select(
-            F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-        .orderBy("window_start", "event_type")
-    )
-
-
-def _stage_replay_files(tables, replay_dir: str) -> None:
-    """Write arrow tables as ordered single-file micro-batches: the file
-    stream source orders by modification time, so mtimes are pinned 60 s
-    apart to force the batch sequence."""
-    import os
-    import time as _time
-
-    import pyarrow.parquet as pq
-
-    t0 = _time.time()
-    for i, b in enumerate(tables):
-        dst = os.path.join(replay_dir, f"batch-{i}.parquet")
-        pq.write_table(b, dst)
-        os.utime(dst, (t0 + 60 * i, t0 + 60 * i))
+    return sink.select(
+        F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
+        "event_type",
+        "n_events",
+        "total_value",
+    ).orderBy("window_start", "event_type")
 
 
 @query(
@@ -259,93 +228,36 @@ def q_stream_watermark_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle re-derives exactly which odd rows survive (window end >
     W1) with plain SQL — proving Spark's late-data drop rule equals the
-    batch filter. File processing order is forced with explicit mtimes +
-    maxFilesPerTrigger=1; decimal-carried sums make the result
-    independent of accumulation order.
+    batch filter. The harness stages one file per micro-batch, in
+    order; decimal-carried sums make the result independent of
+    accumulation order.
 
     Covers the reference's streaming watermark/late-data bullet
     (SURVEY.md §2.B) with a hard driver-gate check rather than only
     pytest equivalence."""
-    import datetime
-    import shutil
-    import tempfile
-    import uuid
-
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     # bounded slice: replay cost is micro-batch/state-store overhead, not
     # data volume — 20k events exercise identical semantics at any sf
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_wm_replay_")
-
-    # ONE Spark scan; the replay files are tiny and written driver-side
-    # (this is test-harness staging, not a data path)
     tbl = ev.toArrow()
-    mx_scalar = pc.max(tbl["ts"])
-    # empty corpus: max is NULL — any fixed base works, the sentinel only
-    # advances the watermark past (nonexistent) data
-    mx_ts = mx_scalar.as_py() or datetime.datetime(2024, 1, 1)
+    sentinel, mx_ts = _late_sentinel(tbl)
     even_mask = pc.equal(pc.bit_wise_and(tbl["event_id"], 1), 0)
-    sentinel = pa.table(
-        {
-            "event_id": pa.array([-1], tbl.schema.field("event_id").type),
-            "ts": pa.array(
-                [mx_ts + datetime.timedelta(hours=2)], tbl.schema.field("ts").type
-            ),
-            "user_id": pa.array([-1], tbl.schema.field("user_id").type),
-            "event_type": pa.array(["__sentinel"], tbl.schema.field("event_type").type),
-            "value": pa.array([0.0], tbl.schema.field("value").type),
-            "props": pa.array(["{}"], tbl.schema.field("props").type),
-        }
-    ).select([f.name for f in tbl.schema])
-    _stage_replay_files(
-        [
-            tbl.filter(even_mask),
-            tbl.slice(0, 0),  # settling batch: applies W1 to the operator
-            tbl.filter(pc.invert(even_mask)),
-            sentinel,
-        ],
-        replay_dir,
-    )
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    agg = (
-        stream.withWatermark("ts", "30 minutes")
+    batches = [
+        tbl.filter(even_mask),
+        tbl.slice(0, 0),  # settling batch: applies W1 to the operator
+        tbl.filter(pc.invert(even_mask)),
+        sentinel,
+    ]
+    sink = replay(
+        spark,
+        batches,
+        lambda s: s.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "10 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
-            ).alias("total_value"),
-        )
+        .agg(F.count(F.lit(1)).alias("n_events"), _exact_total()),
     )
-    sink = f"wm_replay_{uuid.uuid4().hex[:8]}"
-    # state-store cost is per (micro-batch × shuffle partition); 2 state
-    # partitions are plenty for a bounded replay and cut wall time ~3×.
-    # (A real cluster deployment would size this to the key cardinality.)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(sink)
+        sink
         # the sentinel's own window never finalizes, but filter defensively
         # in case emission semantics ever include it (real windows all
         # start at or before the max real event time)
@@ -475,71 +387,19 @@ def q_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     advances the watermark past every session end so append emits the
     final merged sessions (Spark merges session state as data arrives;
     the trailing no-data micro-batch flushes once the watermark passes).
-    Same staging as q_stream_watermark_replay; decimal-carried sums keep
+    Same sentinel as q_stream_watermark_replay; decimal-carried sums keep
     the result independent of accumulation order."""
-    import datetime
-    import shutil
-    import tempfile
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_sess_replay_")
     tbl = ev.toArrow()
-    # empty corpus: max is NULL — any fixed base works (see the
-    # watermark replay's sentinel note)
-    mx_ts = pc.max(tbl["ts"]).as_py() or datetime.datetime(2024, 1, 1)
-    sentinel = pa.table(
-        {
-            "event_id": pa.array([-1], tbl.schema.field("event_id").type),
-            "ts": pa.array(
-                [mx_ts + datetime.timedelta(hours=2)], tbl.schema.field("ts").type
-            ),
-            "user_id": pa.array([-1], tbl.schema.field("user_id").type),
-            "event_type": pa.array(["__sentinel"], tbl.schema.field("event_type").type),
-            "value": pa.array([0.0], tbl.schema.field("value").type),
-            "props": pa.array(["{}"], tbl.schema.field("props").type),
-        }
-    ).select([f.name for f in tbl.schema])
-    _stage_replay_files([tbl, sentinel], replay_dir)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    agg = (
-        stream.withWatermark("ts", "30 minutes")
+    sink = replay(
+        spark,
+        [tbl, _late_sentinel(tbl)[0]],
+        lambda s: s.withWatermark("ts", "30 minutes")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
-            ).alias("total_value"),
-        )
+        .agg(F.count(F.lit(1)).alias("n_events"), _exact_total()),
     )
-    sink = f"sess_replay_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(sink)
-        .filter(F.col("user_id") >= 0)  # the sentinel's session never emits
+        sink.filter(F.col("user_id") >= 0)  # the sentinel's session never emits
         .select(
             "user_id",
             F.date_format(F.col("w.start"), _TS_FMT).alias("session_start"),
@@ -573,54 +433,20 @@ def q_stream_sliding_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark/join/dedup/arbitrary state) now has an oracle-gated
     replay. Decimal-carried sums keep micro-batch accumulation order out
     of the result."""
-    import shutil
-    import tempfile
-    import uuid
-
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_slide_replay_")
-    tbl = ev.toArrow()
-    n = tbl.num_rows
-    step = (n + 1) // 2
-    _stage_replay_files([tbl.slice(0, step), tbl.slice(step, step)], replay_dir)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    agg = stream.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w")).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4).alias(
-            "total_value"
+    sink = replay(
+        spark,
+        even_batches(ev.toArrow(), 2),
+        lambda s: s.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w")).agg(
+            F.count(F.lit(1)).alias("n_events"), _exact_total()
         ),
+        output_mode="complete",
     )
-    sink = f"slide_replay_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return (
-        spark.table(sink)
-        .select(
-            F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
-            "n_events",
-            "total_value",
-        )
-        .orderBy("window_start")
-    )
+    return sink.select(
+        F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
+        "n_events",
+        "total_value",
+    ).orderBy("window_start")
 
 
 @query(
@@ -648,55 +474,29 @@ def q_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     state at scale; the oracle is the plain batch join — inner
     stream-stream joins emit exactly the batch result once the replay
     drains."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from etl4s_spark.streaming.core import stream_stream_join
+    def attribute(stream: DataFrame) -> DataFrame:
+        views = stream.filter(F.col("event_type") == "view").select(
+            F.col("user_id").alias("user_id"),
+            F.col("event_id").alias("view_id"),
+            F.col("ts").alias("v_ts"),
+        )
+        clicks = stream.filter(F.col("event_type") == "click").select(
+            F.col("user_id").alias("c_user_id"),
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("c_ts"),
+        )
+        return stream_stream_join(
+            views,
+            clicks,
+            "v_ts",
+            "c_ts",
+            (F.col("user_id") == F.col("c_user_id"))
+            & (F.col("c_ts") > F.col("v_ts"))
+            & (F.col("c_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
+        ).select("user_id", "view_id", "click_id")
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_ssj_replay_")
-    _stage_replay_files([ev.toArrow()], replay_dir)
-
-    stream = spark.readStream.schema(ev.schema).parquet(replay_dir)
-    views = stream.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("user_id"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("v_ts"),
-    )
-    clicks = stream.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user_id"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("c_ts"),
-    )
-    joined = stream_stream_join(
-        views,
-        clicks,
-        "v_ts",
-        "c_ts",
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("c_ts") > F.col("v_ts"))
-        & (F.col("c_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-    ).select("user_id", "view_id", "click_id")
-
-    sink = f"ssj_replay_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).orderBy("user_id", "view_id", "click_id")
+    return replay(spark, [ev.toArrow()], attribute).orderBy("user_id", "view_id", "click_id")
 
 
 @query(
@@ -715,41 +515,14 @@ def q_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     half of the exact-dedup tier; dropDuplicatesWithinWatermark
     (streaming/core.py stateful_dedup) is the bounded-state variant when
     keys don't repeat outside a time horizon."""
-    import shutil
-    import tempfile
-    import uuid
-
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_sdedup_replay_")
     tbl = ev.toArrow()
-    _stage_replay_files([tbl, tbl], replay_dir)  # duplicates across batches
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
+    sink = replay(
+        spark,
+        [tbl, tbl],  # duplicates across batches
+        lambda s: s.select("event_id", "user_id", "event_type").dropDuplicates(["event_id"]),
     )
-    deduped = stream.select("event_id", "user_id", "event_type").dropDuplicates(
-        ["event_id"]
-    )
-    sink = f"sdedup_replay_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).orderBy("event_id")
+    return sink.orderBy("event_id")
 
 
 @query(
@@ -780,12 +553,6 @@ def q_stream_state_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent and the final total compares as a BIGINT with no
     rounding anywhere. Covers SURVEY §2.B streaming 'arbitrary state'
     (VERDICT r2 item 2)."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from etl4s_spark.streaming.core import stateful_running_agg
-
     # bounded slice: the replay cost is per (micro-batch x key-group)
     # Python invocation, not data volume — 2 batches over a few thousand
     # keys prove cross-batch state at any sf
@@ -800,38 +567,14 @@ def q_stream_state_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value_micros"),
         )
     )
-    replay_dir = _replay_tmpdir("etl4s_state_replay_")
-    tbl = ev.toArrow()
-    n = tbl.num_rows
-    step = (n + 1) // 2
-    _stage_replay_files([tbl.slice(i * step, step) for i in range(2)], replay_dir)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
+    sink = replay(
+        spark,
+        even_batches(ev.toArrow(), 2),
+        lambda s: stateful_running_agg(s, ["user_id"], "value_micros"),
+        output_mode="update",
     )
-    running = stateful_running_agg(stream, ["user_id"], "value_micros")
-    sink = f"state_replay_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            running.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(sink)
-        .groupBy("user_id")
+        sink.groupBy("user_id")
         .agg(F.max(F.struct("n_events", "total")).alias("last"))
         .select(
             "user_id",
@@ -861,45 +604,17 @@ def q_stream_sink_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes are made idempotent by keying on batch_id (overwrite-by-
     partition or MERGE); append is exact here because the replay runs
     failure-free start-to-finish."""
-    import shutil
-    import tempfile
-
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") < 20000)
         .select("event_id", "user_id", F.round("value", 4).alias("value"))
     )
-    replay_dir = _replay_tmpdir("etl4s_sink_replay_src_")
-    out_dir = _replay_tmpdir("etl4s_sink_replay_out_") + "/out"
-    tbl = ev.toArrow()
-    n = tbl.num_rows
-    step = (n + 1) // 2
-    _stage_replay_files([tbl.slice(0, step), tbl.slice(step, step)], replay_dir)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
+    return replay(
+        spark,
+        even_batches(ev.toArrow(), 2),
+        foreach_batch=lambda b, _, out: b.write.mode("append").parquet(f"{out}/out"),
+        read_back=lambda out: spark.read.parquet(f"{out}/out").orderBy("event_id"),
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-        # materialize BEFORE cleanup: the returned frame must not lazily
-        # reference the temp sink (the q_stream_upsert_replay rule —
-        # otherwise one versioned temp dir leaks per invocation)
-        out_tbl = spark.read.parquet(out_dir).orderBy("event_id").toArrow()
-    finally:
-        q.stop()
-        shutil.rmtree(replay_dir, ignore_errors=True)
-        shutil.rmtree(os.path.dirname(out_dir), ignore_errors=True)
-    # hand the Arrow table to createDataFrame directly (Spark 4 accepts
-    # pyarrow tables): the old .to_pandas() hop could alter nullability/
-    # dtypes and raises on an empty result (ADVICE r5)
-    return spark.createDataFrame(out_tbl)
 
 
 @query(
@@ -1005,10 +720,6 @@ def q_stream_static_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     how slowly-changing enrichment stays fresh without restarting the
     stream). Decimal-carried sums make micro-batch accumulation order
     irrelevant; the oracle is the one-shot batch join+aggregate."""
-    import shutil
-    import tempfile
-    import uuid
-
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -1018,44 +729,15 @@ def q_stream_static_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_name").alias("nation"),
     )
 
-    replay_dir = _replay_tmpdir("etl4s_ss_static_replay_")
-    tbl = ev.select("event_id", "ts", "user_id", "value").toArrow()
-    n = tbl.num_rows
-    step = (n + 1) // 2
-    _stage_replay_files([tbl.slice(0, step), tbl.slice(step, step)], replay_dir)
-
-    stream = (
-        spark.readStream.schema(ev.select("event_id", "ts", "user_id", "value").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    enriched = stream.join(
-        F.broadcast(dim), stream.user_id + 1 == dim.c_custkey
-    )
-    agg = enriched.groupBy("nationkey", "nation").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.round(
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
-        ).alias("total_value"),
-    )
-    sink = f"ss_static_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
+    def enrich(stream: DataFrame) -> DataFrame:
+        enriched = stream.join(F.broadcast(dim), stream.user_id + 1 == dim.c_custkey)
+        return enriched.groupBy("nationkey", "nation").agg(
+            F.count(F.lit(1)).cast("long").alias("n_events"), _exact_total()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).orderBy("nationkey")
+
+    tbl = ev.select("event_id", "ts", "user_id", "value").toArrow()
+    sink = replay(spark, even_batches(tbl, 2), enrich, output_mode="complete")
+    return sink.orderBy("nationkey")
 
 
 @query(
@@ -1095,63 +777,26 @@ def q_stream_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct) — both associative, so merging per-batch partials MUST
     equal the one-shot batch aggregate the oracle computes. Replays in
     two micro-batches split mid-stream to prove it."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_upsert_replay_src_")
-    target_base = _replay_tmpdir("etl4s_upsert_target_")
-    tbl = ev.select("event_id", "ts", "user_id", "value").toArrow()
-    n = tbl.num_rows
-    step = (n + 1) // 2
-    _stage_replay_files([tbl.slice(0, step), tbl.slice(step, step)], replay_dir)
-
-    stream = (
-        spark.readStream.schema(ev.select("event_id", "ts", "user_id", "value").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    from etl4s_spark.streaming.core import versioned_upsert_batch
-
-    versions: list[str] = []
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        dst = versioned_upsert_batch(
-            spark, target_base, batch_df, batch_id, _upsert_merge_fn
-        )
-        versions.append(dst)
-
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-        # materialize the final version eagerly so BOTH temp dirs can be
-        # removed before returning (the result is a bounded per-user
-        # aggregate; a lazy reader over versions[-1] would leak target_base)
-        final = (
-            spark.read.parquet(versions[-1])
-            .select(
-                "user_id",
-                "n_events",
-                F.round(F.col("cand.value"), 4).alias("last_value"),
-                F.date_format(F.col("cand.ts"), _TS_FMT).alias("last_ts"),
-            )
-            .orderBy("user_id")
-        )
-        final_tbl = final.toArrow()
-    finally:
-        q.stop()
-        shutil.rmtree(replay_dir, ignore_errors=True)
-        shutil.rmtree(target_base, ignore_errors=True)
-    return (
-        spark.createDataFrame(final_tbl)
+    final = replay(
+        spark,
+        even_batches(ev.select("event_id", "ts", "user_id", "value").toArrow(), 2),
+        merge_fn=_upsert_merge_fn,
+        read_back=lambda latest: spark.read.parquet(latest)
         .select(
-            F.col("user_id").cast("long"),
-            F.col("n_events").cast("long"),
-            "last_value",
-            "last_ts",
+            "user_id",
+            "n_events",
+            F.round(F.col("cand.value"), 4).alias("last_value"),
+            F.date_format(F.col("cand.ts"), _TS_FMT).alias("last_ts"),
         )
-        .orderBy("user_id")
+        .orderBy("user_id"),
     )
+    return final.select(
+        F.col("user_id").cast("long"),
+        F.col("n_events").cast("long"),
+        "last_value",
+        "last_ts",
+    ).orderBy("user_id")
 
 
 @query(
@@ -1173,45 +818,16 @@ def q_stream_dedup_wm_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     production sizes the horizon to the source's re-delivery window
     (e.g. Kafka retention), which is the entire point: state is bounded
     by horizon × arrival rate, not by corpus cardinality."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from etl4s_spark.streaming.core import stateful_dedup
-
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_wmdedup_replay_")
     tbl = ev.select("event_id", "ts", "user_id", "event_type").toArrow()
-    _stage_replay_files([tbl, tbl], replay_dir)  # duplicates across batches
-
-    stream = (
-        spark.readStream.schema(
-            ev.select("event_id", "ts", "user_id", "event_type").schema
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
+    sink = replay(
+        spark,
+        [tbl, tbl],  # duplicates across batches
+        lambda s: stateful_dedup(s, ["event_id"], ts_col="ts", watermark="30 days").select(
+            "event_id", "user_id", "event_type"
+        ),
     )
-    deduped = stateful_dedup(
-        stream, ["event_id"], ts_col="ts", watermark="30 days"
-    ).select("event_id", "user_id", "event_type")
-    sink = f"wmdedup_replay_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).orderBy("event_id")
+    return sink.orderBy("event_id")
 
 
 @query(
@@ -1542,51 +1158,25 @@ def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_topk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming top-k: tumbling 10-minute counts per event type are
     ACTUALLY STREAMED (file-source micro-batches → complete-mode memory
-    sink — the same replay machinery as q_stream_tumbling_replay), then
+    sink, replayed like q_stream_tumbling_replay), then
     the top-2 types per window are ranked BATCH-side over the sink
     table. This split is deliberate and is the production shape: ranking
     inside the stream would need a per-window sort on every trigger,
     while ranking the final state costs one WindowGroupLimit over
     O(windows × types) rows. Counts are integers — no accumulation-order
     sensitivity; rank ties break on event_type."""
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql.window import Window
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_stream_topk_")
-    tbl = ev.toArrow()
-    n = tbl.num_rows
-    step = (n + 3) // 4
-    _stage_replay_files([tbl.slice(i * step, step) for i in range(4)], replay_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
+    sink = replay(
+        spark,
+        even_batches(ev.toArrow(), 4),
+        lambda s: s.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type").agg(
+            F.count(F.lit(1)).alias("n_events")
+        ),
+        output_mode="complete",
     )
-    agg = stream.groupBy(
-        F.window("ts", "10 minutes").alias("w"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("n_events"))
-    sink = f"topk_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    counts = spark.table(sink).select(
+    counts = sink.select(
         F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
         "event_type",
         "n_events",
@@ -1656,61 +1246,22 @@ def q_stream_bitmap_distinct_replay(spark: SparkSession, sf_dir: str) -> DataFra
     retries via batch_id keying, streaming/core.py
     versioned_upsert_batch). State is O(users/62) words per event type,
     never a raw-id set."""
-    import shutil
-    import tempfile
+    from etl4s_spark.operators.sketches import bitmap_counts
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_bitmap_replay_src_")
-    target_base = _replay_tmpdir("etl4s_bitmap_target_")
-    tbl = ev.select("event_id", "event_type", "user_id").toArrow()
-    n = tbl.num_rows
-    step = (n + 2) // 3
-    _stage_replay_files(
-        [tbl.slice(i * step, step) for i in range(3)], replay_dir
+    final = replay(
+        spark,
+        even_batches(ev.select("event_id", "event_type", "user_id").toArrow(), 3),
+        merge_fn=_bitmap_merge_fn,
+        read_back=lambda latest: bitmap_counts(spark.read.parquet(latest), ["event_type"])
+        .select("event_type", F.col("n_distinct").alias("n_users"), "n_buckets")
+        .orderBy("event_type"),
     )
-
-    stream = (
-        spark.readStream.schema(ev.select("event_id", "event_type", "user_id").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    from etl4s_spark.operators.sketches import bitmap_counts
-    from etl4s_spark.streaming.core import versioned_upsert_batch
-
-    versions: list[str] = []
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        dst = versioned_upsert_batch(
-            spark, target_base, batch_df, batch_id, _bitmap_merge_fn
-        )
-        versions.append(dst)
-
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-        final = (
-            bitmap_counts(spark.read.parquet(versions[-1]), ["event_type"])
-            .select(
-                "event_type",
-                F.col("n_distinct").alias("n_users"),
-                "n_buckets",
-            )
-            .orderBy("event_type")
-        )
-        final_tbl = final.toArrow()
-    finally:
-        q.stop()
-        shutil.rmtree(replay_dir, ignore_errors=True)
-        shutil.rmtree(target_base, ignore_errors=True)
-    return (
-        spark.createDataFrame(final_tbl)
-        .select(
-            "event_type",
-            F.col("n_users").cast("long"),
-            F.col("n_buckets").cast("long"),
-        )
-        .orderBy("event_type")
-    )
+    return final.select(
+        "event_type",
+        F.col("n_users").cast("long"),
+        F.col("n_buckets").cast("long"),
+    ).orderBy("event_type")
 
 
 @query(
@@ -1747,8 +1298,6 @@ def q_stream_pyds_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     handoff, AND the stream-equals-batch contract are all inside the
     oracle gate. Counts and bigint sums are batch-order-invariant by
     construction, so micro-batch boundaries cannot move the result."""
-    import uuid
-
     from etl4s_spark.sources.pyds import register_synthdocs
 
     register_synthdocs(spark)
@@ -1758,30 +1307,16 @@ def q_stream_pyds_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("batch", 250)
         .load()
     )
-    agg = stream.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_words").cast("long").alias("total_words"),
-        F.min("doc_id").cast("long").alias("min_doc"),
-        F.max("doc_id").cast("long").alias("max_doc"),
+    sink = replay(
+        spark,
+        stream,
+        lambda s: s.groupBy("lang").agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("n_words").cast("long").alias("total_words"),
+            F.min("doc_id").cast("long").alias("min_doc"),
+            F.max("doc_id").cast("long").alias("max_doc"),
+        ),
+        output_mode="complete",
     )
-    sink = f"pyds_replay_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return (
-        spark.table(sink)
-        .select("lang", "n_docs", "total_words", "min_doc", "max_doc")
-        .orderBy("lang")
-    )
+    return sink.select("lang", "n_docs", "total_words", "min_doc", "max_doc").orderBy("lang")
+

@@ -1,7 +1,7 @@
 from etl4s_spark.streaming.core import (  # noqa: F401
     file_stream,
     foreach_batch_collect,
-    run_stream_to_memory,
+    replay,
     session_window_agg,
     sliding_window_agg,
     stateful_dedup,

@@ -11,6 +11,17 @@ what makes 100 TB/day streams possible with finite executor memory. Every
 stateful factory below requires an explicit watermark for exactly that
 reason.
 
+``replay`` is the one stream-replay harness: it stages bounded arrow
+micro-batches as ordered files, reads them back through ``file_stream``
+one file per trigger (or takes a built streaming DataFrame), starts a
+memory or foreachBatch sink, drains it, stops it and removes every temp
+dir it made. It sets REPLAY_SHUFFLE_PARTITIONS only across ``start()``
+(which fixes the stream's partition count) under a lock, so concurrent
+replays cannot leave it behind in the session. The stream runs in the
+caller's session, so the caller's StreamingQueryListeners see its
+progress. The ``q_stream_*_replay`` queries (queries/streaming_batch.py)
+are its callers.
+
 Reference parity: etl4s has no streaming surface of its own; its Flink
 examples delegate exactly like the Spark ones (docs/examples-flink.md).
 This module is the native replacement.
@@ -18,14 +29,24 @@ This module is the native replacement.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-from typing import Any
+import os
+import shutil
+import tempfile
+import threading
+import time
+import uuid
+from collections.abc import Callable, Iterator, Sequence
+from typing import TYPE_CHECKING
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 def file_stream(
@@ -287,24 +308,138 @@ def versioned_upsert_batch(
     return dst
 
 
-def run_stream_to_memory(
-    df: DataFrame,
-    query_name: str,
-    output_mode: str = "append",
-    timeout_sec: float = 60.0,
-) -> Any:
-    """Start a memory-sink query, process everything available, stop.
-    Returns the SparkSession-queryable in-memory table name."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .start()
+# Shuffle/state partition count of every replay. Each replay's input is
+# bounded by construction (event_id < 20000, < 8000 for the state replay,
+# 1000 rows for pyds) at every scale factor, and state-store commit cost is
+# per (micro-batch x partition), so a small fixed count is the right size
+# here; an unbounded production stream sizes it to its key cardinality.
+REPLAY_SHUFFLE_PARTITIONS = 2
+
+# serializes the conf swap across start(): a concurrent replay must never
+# read another's temporary value as the session's own
+_START_LOCK = threading.Lock()
+
+
+def _replay_tmpdir(prefix: str) -> str:
+    """Scratch dir for staged replay files and foreachBatch targets.
+    Prefers the tmpfs over disk-backed /tmp: the files are bounded, live
+    for one replay, and the file source re-reads them per micro-batch.
+    SPARK_GRAFT_REPLAY_TMP overrides (e.g. a cluster's fast scratch)."""
+    root = os.environ.get("SPARK_GRAFT_REPLAY_TMP") or (
+        "/dev/shm" if os.path.isdir("/dev/shm") else None
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(int(timeout_sec))
-    return query_name
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+
+def stage_files(tables: Sequence[pa.Table], replay_dir: str) -> None:
+    """Write arrow tables as ordered single-file micro-batches: the file
+    stream source orders by modification time, so mtimes are pinned 60 s
+    apart to force the batch sequence."""
+    import pyarrow.parquet as pq
+
+    t0 = time.time()
+    for i, b in enumerate(tables):
+        dst = os.path.join(replay_dir, f"batch-{i}.parquet")
+        pq.write_table(b, dst)
+        os.utime(dst, (t0 + 60 * i, t0 + 60 * i))
+
+
+def even_batches(tbl: pa.Table, n: int) -> list[pa.Table]:
+    """Cut ``tbl`` into ``n`` contiguous micro-batches (the last may be
+    short, or empty)."""
+    step = (tbl.num_rows + n - 1) // n
+    return [tbl.slice(i * step, step) for i in range(n)]
+
+
+def _start(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` with REPLAY_SHUFFLE_PARTITIONS. start() clones the
+    session conf into the stream (and its offset log), so the session's
+    own value is back in place as soon as start() returns."""
+    key = "spark.sql.shuffle.partitions"
+    with _START_LOCK:
+        prev = spark.conf.get(key)
+        spark.conf.set(key, str(REPLAY_SHUFFLE_PARTITIONS))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(key, prev)
+
+
+def replay(
+    spark: SparkSession,
+    source: Sequence[pa.Table] | DataFrame,
+    transform: Callable[[DataFrame], DataFrame] = lambda s: s,
+    output_mode: str = "append",
+    foreach_batch: Callable[[DataFrame, int, str], None] | None = None,
+    merge_fn: Callable[[DataFrame | None, DataFrame], DataFrame] | None = None,
+    read_back: Callable[[str], DataFrame] | None = None,
+) -> DataFrame:
+    """Replay a bounded input through a real stream and return its result.
+
+    ``source`` is a list of arrow micro-batches, staged as one file each
+    and read by a ``file_stream`` one file per trigger, or an already
+    built streaming DataFrame. ``transform`` is the streaming plan. The
+    harness starts the sink (with REPLAY_SHUFFLE_PARTITIONS, see
+    ``_start``), drains it with processAllAvailable, stops it and removes
+    every temp dir it made. The stream runs in the caller's session, so
+    the caller's StreamingQueryListeners see its progress.
+
+    Sinks:
+    - default: an ``output_mode`` memory sink. The result is the sink
+      table; its temp view is dropped once the frame is built, so the
+      catalog does not grow by one view per replay.
+    - ``foreach_batch(batch_df, batch_id, out_dir)``: writes each batch
+      under a temp dir; ``read_back(out_dir)`` reads the result.
+    - ``merge_fn``: folds each batch into a versioned copy-on-write target
+      (``versioned_upsert_batch``); ``read_back(latest_version)`` reads it.
+    File sink results are materialized (via Arrow) before the temp dirs
+    go, so the returned frame references none of them."""
+    made: list[str] = []
+    try:
+        if isinstance(source, DataFrame):
+            stream = source
+        else:
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            src = _replay_tmpdir("etl4s_replay_src_")
+            made.append(src)
+            stage_files(source, src)
+            schema = from_arrow_schema(source[0].schema)
+            stream = file_stream(spark, src, schema, max_files_per_trigger=1)
+        writer = transform(stream).writeStream
+        to_memory = foreach_batch is None and merge_fn is None
+        if to_memory:
+            name = f"replay_{uuid.uuid4().hex[:8]}"
+            writer = writer.format("memory").queryName(name).outputMode(output_mode)
+        else:
+            out = _replay_tmpdir("etl4s_replay_out_")
+            made.append(out)
+            versions: list[str] = []
+            if merge_fn is not None:
+
+                def foreach_batch(batch_df: DataFrame, batch_id: int, out: str) -> None:
+                    versions.append(
+                        versioned_upsert_batch(spark, out, batch_df, batch_id, merge_fn)
+                    )
+
+            writer = writer.foreachBatch(lambda b, i: foreach_batch(b, i, out))
+        q = _start(spark, writer)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        if to_memory:
+            result = spark.table(name)
+            spark.catalog.dropTempView(name)
+            return result
+        # hand the Arrow table to createDataFrame directly: a pandas hop
+        # could alter nullability/dtypes and raises on an empty result
+        latest = versions[-1] if merge_fn is not None else out
+        return spark.createDataFrame(read_back(latest).toArrow())
+    finally:
+        for d in made:
+            shutil.rmtree(d, ignore_errors=True)
+
 
 class TwsProfileProcessor:
     """Typed-composite-state processor for transformWithStateInPandas

@@ -202,15 +202,13 @@ def test_stream_dedup_wm_replay_twice_delivered_exactly_once(spark, tmp_path):
     """The watermark-dedup operator is itself a retry shield: the same
     file replayed as two micro-batches within the horizon emits each key
     once — redelivery at the SOURCE (not just the sink) is absorbed."""
-    from etl4s_spark.streaming.core import stateful_dedup
-
-    from etl4s_spark.queries.streaming_batch import _stage_replay_files
+    from etl4s_spark.streaming.core import stage_files, stateful_dedup
 
     src = str(tmp_path / "replay")
     (tmp_path / "replay").mkdir()
     rows = _mk_batch(spark, [(1, 10, 1.0), (2, 20, 2.0), (3, 30, 3.0)])
     tbl = rows.toArrow()
-    _stage_replay_files([tbl, tbl], src)  # the SAME batch, delivered twice
+    stage_files([tbl, tbl], src)  # the SAME batch, delivered twice
 
     stream = (
         spark.readStream.schema(rows.schema)
