@@ -15,8 +15,12 @@ unrelated content into one mega-cluster.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+from etl4s_spark.operators.pinning import materialize
 
 
 def symmetrize(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
@@ -24,6 +28,53 @@ def symmetrize(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> Data
     return pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).union(
         pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     )
+
+
+class NotConverged(RuntimeError):
+    """A :func:`fixpoint` loop spent its round budget without ``done``."""
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    metrics: list[Column],
+    done: Callable[[list[dict]], bool],
+    max_rounds: int,
+) -> tuple[DataFrame, list[dict]]:
+    """Iterate ``step`` to a fixpoint at one Spark job per round.
+
+    ``state`` is the first round's lazy frame. Each round materializes
+    its frame (``pinning.materialize``, which also truncates lineage)
+    with a fresh ``Observation`` of ``rows`` (its row count) and
+    ``metrics`` at the plan root, so the checkpoint job itself collects
+    the convergence aggregates: reading them costs no second action.
+    Returns ``(state, history)`` — history is every round's metrics
+    dict, oldest first — once ``done(history)`` holds or a round has no
+    rows (every step here maps empty to empty, and ``sum``/``bit_xor``
+    are NULL over zero rows). Otherwise ``step`` builds the next round;
+    after ``max_rounds`` rounds, raises :class:`NotConverged`.
+
+    The observation must sit at the plan ROOT: there it is collected in
+    the checkpoint job's result stage, whose accumulator updates Spark
+    applies once per task. Below a shuffle it would run in a shuffle-map
+    stage, where a retried stage could count rows twice — and a doubled
+    ``bit_xor`` term cancels out silently.
+    """
+    history: list[dict] = []
+    while True:
+        obs = Observation()
+        state = materialize(
+            state.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics)
+        )
+        history.append(obs.get)
+        if not history[-1]["rows"] or done(history):
+            return state, history
+        if len(history) >= max_rounds:
+            raise NotConverged(
+                f"not converged after max_rounds={max_rounds} rounds (last round "
+                f"observed {history[-1]}); raise the operator's round budget"
+            )
+        state = step(state)
 
 
 def degree_histogram(
@@ -156,7 +207,6 @@ def bfs_hops(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_hops: int = 6,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Multi-source BFS hop distance over an undirected edge list — the
     Spark answer to SQL's recursive CTE (``WITH RECURSIVE``), which
@@ -176,40 +226,37 @@ def bfs_hops(
     Scale posture: each round is one shuffle join (frontier ⨝ edges on
     src) + one anti-join on id — both partition on node ids, and the
     frontier is always the SMALLEST of the three frames, so AQE
-    broadcasts it when a level is narrow. Per-round checkpointing keeps
-    the plan constant-size (reliable checkpoint with ``checkpoint_dir``
-    on a real cluster, localCheckpoint otherwise); the per-round
-    driver action is one count() on the frontier — the loop-termination
-    probe a recursive CTE engine does internally.
+    broadcasts it when a level is narrow. The rounds run on
+    :func:`fixpoint`: ``dist`` flags its newest level as the frontier,
+    and the frontier size — the loop-termination probe a recursive CTE
+    engine does internally — is observed by the round's own checkpoint
+    job, so no round runs a separate count().
     """
-    if checkpoint_dir is not None:
-        pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    edges = materialize(symmetrize(pairs, id_a, id_b).distinct())
 
-    def _persist(df: DataFrame) -> DataFrame:
-        return (
-            df.checkpoint(eager=True)
-            if checkpoint_dir is not None
-            else df.localCheckpoint(eager=True)
-        )
-
-    edges = _persist(symmetrize(pairs, id_a, id_b).distinct())
-    dist = _persist(seeds.select(F.col(seeds.columns[0]).alias("id")).distinct().select(
-        "id", F.lit(0).cast("long").alias("hops")
-    ))
-    frontier = dist.select("id")
-    for h in range(1, max_hops + 1):
-        nxt = _persist(
+    def expand(dist: DataFrame) -> DataFrame:
+        frontier = dist.where(F.col("__new"))
+        nxt = (
             frontier.join(edges, frontier["id"] == edges["src"])
-            .select(F.col("dst").alias("id"))
-            .distinct()
+            .groupBy(F.col("dst").alias("id"))
+            # one level per round: every frontier node sits at the same depth
+            .agg((F.min("hops") + 1).alias("hops"))
             .join(dist.select("id"), "id", "left_anti")
-            .select("id", F.lit(h).cast("long").alias("hops"))
         )
-        if nxt.count() == 0:
-            break
-        dist = _persist(dist.union(nxt))
-        frontier = nxt.select("id")
-    return dist
+        return dist.select("id", "hops", F.lit(False).alias("__new")).unionByName(
+            nxt.select("id", "hops", F.lit(True).alias("__new"))
+        )
+
+    dist, _ = fixpoint(
+        seeds.select(F.col(seeds.columns[0]).alias("id")).distinct().select(
+            "id", F.lit(0).cast("long").alias("hops"), F.lit(True).alias("__new")
+        ),
+        expand,
+        [F.count_if("__new").alias("frontier")],
+        lambda h: not h[-1]["frontier"] or len(h) > max_hops,
+        max_hops + 1,
+    )
+    return dist.drop("__new")
 
 
 def k_core(
@@ -227,52 +274,48 @@ def k_core(
     positive bucket graph has a small (often empty) 3-core, while real
     duplicate cliques survive intact.
 
-    Each round: one degree aggregation (map-side combined on src) and
-    two semi-joins restricting the edge list to surviving endpoints —
-    all partitioned on node ids, no global structure. The loop
-    terminates when the surviving-node count is stable (peeling is
-    monotone, so equality means a fixpoint); per-round localCheckpoint
-    keeps the plan flat exactly as connected_components does. Raises
-    RuntimeError if ``max_iters`` rounds don't converge — at most
-    |V| rounds can ever shrink the graph, so hitting the guard means
-    the budget is simply too small for the graph's peel depth.
+    Each round is one :func:`fixpoint` round over the (node, degree)
+    table: two semi-joins restrict the edge list to the nodes that
+    survived the last round (degree ≥ k), and one degree aggregation
+    (map-side combined on src) recounts — all partitioned on node ids,
+    no global structure. The round's checkpoint job also observes how
+    many of its nodes survive; the loop stops when all do (peeling is
+    monotone, so that is the fixpoint) or none do. Raises
+    :class:`NotConverged` if ``max_iters`` rounds don't converge — at
+    most |V| rounds can ever shrink the graph, so hitting the guard
+    means the budget is simply too small for the graph's peel depth.
 
     Returns (id, core_degree): surviving nodes with their degree INSIDE
     the k-core.
 
     ``round_sizes``, when a list, receives the surviving-node count of
     each peel round (diagnostics only — no extra jobs; the counts are
-    the loop's own convergence reads). len(round_sizes) is the measured
-    peel depth, the quantity the GRAPH_SCALING planted-cascade lane
-    records so decade ratios are adjudicated against REAL multi-round
-    peels, not one-round collapses (VERDICT r10 item 4).
+    the loop's own observed convergence metrics). len(round_sizes) is
+    the measured peel depth, which tests/test_round5b_ops.py pins on a
+    planted multi-round cascade.
     """
-    edges = symmetrize(pairs, id_a, id_b).distinct().localCheckpoint(eager=True)
-    n_prev = edges.select("src").distinct().count()
-    for _ in range(max_iters):
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.filter(F.col("d") >= k).select(F.col("src").alias("id"))
-        keep = keep.localCheckpoint(eager=True)
-        n_now = keep.count()
-        if round_sizes is not None:
-            round_sizes.append(n_now)
-        if n_now == 0:
-            return keep.select(
-                "id", F.lit(0).cast("long").alias("core_degree")
-            ).limit(0)
-        edges = (
-            edges.join(keep.withColumnRenamed("id", "src"), "src", "semi")
-            .join(keep.select(F.col("id").alias("dst")), "dst", "semi")
-            .localCheckpoint(eager=True)
-        )
-        if n_now == n_prev:
-            return (
-                edges.groupBy("src")
-                .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
-                .select(F.col("src").alias("id"), "core_degree")
+    edges = materialize(symmetrize(pairs, id_a, id_b).distinct())
+
+    def degrees(e: DataFrame) -> DataFrame:
+        return e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+
+    def peel(deg: DataFrame) -> DataFrame:
+        keep = deg.where(F.col("d") >= k).select("src")
+        return degrees(
+            edges.join(keep, "src", "semi").join(
+                keep.select(F.col("src").alias("dst")), "dst", "semi"
             )
-        n_prev = n_now
-    raise RuntimeError(
-        f"k_core: no fixpoint within {max_iters} rounds (k={k}); "
-        "raise max_iters — peel depth exceeds the budget"
+        )
+
+    deg, history = fixpoint(
+        degrees(edges),
+        peel,
+        [F.count_if(F.col("d") >= k).alias("kept")],
+        lambda h: h[-1]["kept"] in (0, h[-1]["rows"]),
+        max_iters,
+    )
+    if round_sizes is not None:
+        round_sizes.extend(m["kept"] for m in history)
+    return deg.where(F.col("d") >= k).select(
+        F.col("src").alias("id"), F.col("d").cast("long").alias("core_degree")
     )

@@ -1,4 +1,6 @@
-"""Session-scoped pin slots for operator-internal materializations.
+"""Operator-internal materializations: :func:`materialize` (the eager
+checkpoint operators/graph.py ``fixpoint`` takes each round) and
+session-scoped pin slots.
 
 Operators like semdedup and dedup_funnel materialize a shared subplan
 with ``persist()`` (Spark shares no common subplans without explicit
@@ -29,6 +31,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 _SLOTS: dict[str, DataFrame] = {}
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df``, truncating its lineage: a RELIABLE
+    ``checkpoint`` (survives executor loss) when the SparkContext has a
+    checkpoint directory, ``localCheckpoint`` otherwise. The directory
+    is a deployment setting; operators never set it, since a concurrent
+    ``Node.par`` caller shares the context."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=True)
+    return df.checkpoint(eager=True)
 
 
 def pin_slot(df: DataFrame, slot: str) -> DataFrame:

@@ -610,13 +610,10 @@ def q_dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale, while the Spark formulation (O(diameter) shuffle sweeps with
     checkpointed lineage) is the one that survives 100 TB.
 
-    Sweep policy: adaptive (stop at the first no-change sweep). Measured
-    against fixed n_sweeps=3 + end-check on this graph: adaptive wins
-    (7.8 s vs 6.8 s at sf0.1) because near-dup graphs converge in 2
-    sweeps — a fixed bound can only match that by guessing the exact
-    diameter, and overshooting pays a full extra sweep. Fixed mode stays
-    the right call when per-sweep driver actions are the bottleneck
-    (wide clusters, thousands of sweeps of tiny data — not this shape).
+    Sweep policy: stop at the first no-change sweep. Each sweep is one
+    checkpoint job that also observes its changed-label count
+    (operators/graph.py fixpoint), so stopping early costs no extra
+    driver action, and near-dup graphs converge in 2-3 sweeps.
     Nonconvergence policy: on_nonconvergence="star" — a pathological
     high-diameter corpus degrades to the O(log n) star contraction
     (same (id, component) contract) instead of raising mid-pipeline."""

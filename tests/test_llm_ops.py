@@ -549,14 +549,15 @@ def test_connected_components_contracted(spark):
     cc = {r.id: r.component for r in connected_components_contracted(chain).collect()}
     assert set(cc.values()) == {40} and len(cc) == 13
 
-    # cc_kwargs pass through (fixed sweeps on the contracted graph)
-    fixed = {
+    # cc_kwargs pass through to the CC on the contracted graph: a
+    # sufficient sweep budget changes nothing, a too-small one raises
+    budgeted = {
         r.id: r.component
-        for r in connected_components_contracted(
-            pairs, n_sweeps=3, verify_converged=False
-        ).collect()
+        for r in connected_components_contracted(pairs, max_iter=3).collect()
     }
-    assert fixed == plain
+    assert budgeted == plain
+    with pytest.raises(RuntimeError, match="not converged"):
+        connected_components_contracted(chain, max_iter=1)
 
     # self-loop-only nodes (ADVICE r6): a node appearing only as (a, a)
     # must survive as a singleton — plain CC keeps it, the contraction's
@@ -643,8 +644,10 @@ def test_connected_components_random_graphs_vs_union_find(spark):
 
 
 def test_connected_components_modes(spark, tmp_path):
-    """Fixed-sweep / reliable-checkpoint / non-convergence contract
-    (VERDICT r2 item 5, ADVICE r2 medium)."""
+    """Non-convergence / reliable-checkpoint contract (VERDICT r2 item 5,
+    ADVICE r2 medium)."""
+    import os
+
     from etl4s_spark.operators.dedup import connected_components
 
     # two cliques + a bridge: diameter 2 → converges in <= 3 sweeps
@@ -652,44 +655,25 @@ def test_connected_components_modes(spark, tmp_path):
         [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (4, 6), (10, 11)],
         "id_a long, id_b long",
     )
-    adaptive = {r.id: r.component for r in connected_components(pairs).collect()}
+    local = {r.id: r.component for r in connected_components(pairs).collect()}
 
-    # fixed-sweep mode: identical labels, fewer driver actions
-    sc = spark.sparkContext
-    sc.setJobGroup("cc_fixed", "fixed sweeps")
-    fixed = {
-        r.id: r.component
-        for r in connected_components(
-            pairs, n_sweeps=3, verify_converged=False
-        ).collect()
-    }
-    n_fixed_jobs = len(sc.statusTracker().getJobIdsForGroup("cc_fixed"))
-    sc.setJobGroup("cc_adaptive", "adaptive sweeps")
-    connected_components(pairs).collect()
-    n_adaptive_jobs = len(sc.statusTracker().getJobIdsForGroup("cc_adaptive"))
-    sc.setJobGroup(None, None)
-    assert fixed == adaptive
-    # each adaptive sweep = checkpoint job + count job; fixed skips every
-    # per-sweep count → strictly fewer driver actions for the same sweeps
-    assert n_fixed_jobs < n_adaptive_jobs
-
-    # fixed mode with verification catches an undershot sweep bound
+    # the sweep budget raises instead of returning partial labels
     chain = spark.createDataFrame([(i, i + 1) for i in range(20, 28)], "id_a long, id_b long")
-    with pytest.raises(RuntimeError, match="diameter exceeds"):
-        connected_components(chain, n_sweeps=2)
-    # adaptive mode raises instead of returning partial labels
     with pytest.raises(RuntimeError, match="not converged"):
         connected_components(chain, max_iter=2)
 
-    # reliable checkpoint mode: same labels, files land in checkpoint_dir
+    # reliable checkpoint mode comes from the session's checkpoint dir:
+    # same labels, files land there
+    sc = spark.sparkContext
     ckpt = str(tmp_path / "cc_ckpt")
-    reliable = {
-        r.id: r.component
-        for r in connected_components(pairs, checkpoint_dir=ckpt).collect()
-    }
-    assert reliable == adaptive
-    import os
-
+    sc.setCheckpointDir(ckpt)
+    try:
+        reliable = {r.id: r.component for r in connected_components(pairs).collect()}
+    finally:
+        # unset it so later tests keep local checkpoints
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+    assert reliable == local
     assert any(os.scandir(ckpt))
 
 
