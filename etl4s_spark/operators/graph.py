@@ -41,13 +41,16 @@ def fixpoint(
     done: Callable[[list[dict]], bool],
     max_rounds: int,
 ) -> tuple[DataFrame, list[dict]]:
-    """Iterate ``step`` to a fixpoint at one Spark job per round.
+    """Iterate ``step`` to a fixpoint at one materialization per round.
 
     ``state`` is the first round's lazy frame. Each round materializes
     its frame (``pinning.materialize``, which also truncates lineage)
     with a fresh ``Observation`` of ``rows`` (its row count) and
     ``metrics`` at the plan root, so the checkpoint job itself collects
-    the convergence aggregates: reading them costs no second action.
+    the convergence aggregates: reading them costs no second action. A
+    shuffle-free round is one Spark job; a round whose step shuffles is
+    one more per exchange, since AQE runs each shuffle-map stage as its
+    own job before the checkpoint's result stage.
     Returns ``(state, history)`` — history is every round's metrics
     dict, oldest first — once ``done(history)`` holds or a round has no
     rows (every step here maps empty to empty, and ``sum``/``bit_xor``

@@ -305,16 +305,17 @@ def embedding_neardup_pairs(
         F.col(id_col).alias("id_b"), as_double(F.col(vec_col)).alias("__vb")
     ).withColumn("__nb", l2_norm(F.col("__vb")))
     right = F.broadcast(b) if broadcast_right else b
-    return (
-        a.join(right, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")), 6
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
+    cos = F.round(
+        dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")), 6
+    )
+    # Both conjuncts go in the ON clause, the id comparison FIRST: a
+    # cos_sim filter above the projection is pushed into the join
+    # condition AHEAD of id_a < id_b, and the interpreted higher-order
+    # cosine then runs on all n² ordered pairs instead of n²/2 (authored
+    # conjunct order is kept and short-circuits). The projection
+    # re-evaluates the cosine only on the surviving pairs.
+    return a.join(right, (F.col("id_a") < F.col("id_b")) & (cos >= threshold)).select(
+        "id_a", "id_b", cos.alias("cos_sim")
     )
 
 
@@ -1258,20 +1259,19 @@ def semdedup(
         F.col("__v").alias("__vb"),
         F.col("__n").alias("__nb"),
     )
+    # the cosine is the LAST conjunct, after the cheap id comparison (see
+    # embedding_neardup_pairs): a filter above the join would be pushed
+    # ahead of id_a < id_b and score every ordered within-cell pair
+    cos = F.round(
+        dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")), 6
+    )
     dups = (
         a.join(
             b,
-            (F.col("__ca") == F.col("__cb")) & (F.col("id_a") < F.col("id_b")),
+            (F.col("__ca") == F.col("__cb"))
+            & (F.col("id_a") < F.col("id_b"))
+            & (cos >= threshold),
         )
-        .select(
-            "id_b",
-            F.round(
-                dot(F.col("__va"), F.col("__vb"))
-                / (F.col("__na") * F.col("__nb")),
-                6,
-            ).alias("__cos"),
-        )
-        .filter(F.col("__cos") >= threshold)
         .select(F.col("id_b").alias("__dup_id"))
         .distinct()
     )

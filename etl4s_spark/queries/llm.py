@@ -611,9 +611,11 @@ def q_dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed lineage) is the one that survives 100 TB.
 
     Sweep policy: stop at the first no-change sweep. Each sweep is one
-    checkpoint job that also observes its changed-label count
-    (operators/graph.py fixpoint), so stopping early costs no extra
-    driver action, and near-dup graphs converge in 2-3 sweeps.
+    exchange and one materialization — two Spark jobs, the shuffle-map
+    stage and the checkpoint's result stage — and the checkpoint also
+    observes its changed-label count (operators/graph.py fixpoint), so
+    stopping early costs no extra driver action, and near-dup graphs
+    converge in 2-3 sweeps.
     Nonconvergence policy: on_nonconvergence="star" — a pathological
     high-diameter corpus degrades to the O(log n) star contraction
     (same (id, component) contract) instead of raising mid-pipeline."""

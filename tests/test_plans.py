@@ -425,3 +425,56 @@ def test_literal_group_quartiles_window_stays_partitioned(spark, sf_dir):
     # and the result is still the single-group quartile row
     rows = df.collect()
     assert len(rows) == 1 and rows[0]["n"] == 500
+
+
+def join_conjuncts(df) -> list[list[str]]:
+    """Each join's non-equi condition in ``df``'s physical plan, split
+    into its conjuncts in evaluation order (And short-circuits left to
+    right, so the first conjunct runs on every candidate pair)."""
+
+    def split(e) -> list[str]:
+        if e.nodeName() == "And":
+            return split(e.left()) + split(e.right())
+        return [e.sql()]
+
+    found, stack = [], [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        if "Join" in node.nodeName() and node.condition().isDefined():
+            found.append(split(node.condition().get()))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+def test_expensive_join_conjuncts_run_last(spark, sf_dir, monkeypatch):
+    """Catalyst keeps authored conjunct order, but a filter pushed into a
+    join lands AHEAD of the ON clause: the all-pairs cosine and the
+    banded levenshtein must stay behind the cheap id comparison, or they
+    run on every candidate pair instead of the survivors."""
+    import etl4s_spark.operators.dedup as dedup
+    from etl4s_spark.operators.similarity import embedding_neardup_pairs
+    from etl4s_spark.queries import QUERIES, load_all
+
+    e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 50)
+    [cos_join] = join_conjuncts(embedding_neardup_pairs(e, "vec_id", "embedding", 0.4))
+    assert len(cos_join) == 2, cos_join
+    assert "<" in cos_join[0] and "id_a" in cos_join[0], cos_join
+    assert "zip_with" not in cos_join[0] and "zip_with" in cos_join[1], cos_join
+
+    load_all()
+    captured = []
+
+    def capture(pairs, *args, **kwargs):
+        captured.append(pairs)
+        return pairs.select(F.col("id_a").alias("id"), F.col("id_a").alias("component"))
+
+    monkeypatch.setattr(dedup, "connected_components_contracted", capture)
+    QUERIES["q_er_fuzzy_clusters"](spark, sf_dir)
+    for name, df in [
+        ("q_fuzzy_pairs", QUERIES["q_fuzzy_pairs"](spark, sf_dir)),
+        ("q_er_fuzzy_clusters", captured[0]),
+    ]:
+        [lev_join] = join_conjuncts(df)
+        assert "levenshtein" in lev_join[-1], (name, lev_join)
+        assert not any("levenshtein" in c for c in lev_join[:-1]), (name, lev_join)

@@ -9,7 +9,10 @@ support a before/after claim.
 
 Usage:
     python tools/probe_queries.py [--sf DIR] [--runs N] q_a q_b ...
-Prints one JSON object {query: {"runs": [...], "warm_median": s}}.
+Prints one JSON object {query: {"runs": [...], "jobs": [...],
+"warm_median": s}}: ``jobs[i]`` is the number of Spark jobs run ``i``
+launched (the advance of the DAG scheduler's next job id across it), so
+a fixed-cost claim can name its job count next to its time.
 """
 
 from __future__ import annotations
@@ -43,17 +46,24 @@ def main() -> None:
 
     spark.read.parquet(f"{args.sf}/region.parquet").count()
     samples: dict[str, list[float]] = {q: [] for q in args.queries}
+    jobs: dict[str, list[int]] = {q: [] for q in args.queries}
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
     for i in range(args.runs):
         for q in args.queries:
             spark.sparkContext.setJobDescription(f"probe:{q}:run{i}")
-            t0 = time.monotonic()
+            j0, t0 = dag.nextJobId(), time.monotonic()
             df = qs[q](spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
             samples[q].append(round(time.monotonic() - t0, 3))
+            jobs[q].append(dag.nextJobId() - j0)
     out = {}
     for q, ss in samples.items():
         warm = ss[1:] if len(ss) > 1 else ss
-        out[q] = {"runs": ss, "warm_median": round(statistics.median(warm), 3)}
+        out[q] = {
+            "runs": ss,
+            "jobs": jobs[q],
+            "warm_median": round(statistics.median(warm), 3),
+        }
     print(json.dumps(out, indent=1))
 
 
