@@ -7,7 +7,9 @@ COMPACT JSON line on stdout:
      "runs_per_query": R, "sf": 0.1, "detail": "BENCH_DETAIL_r<N>.json"}
 
 Per-query timings (median + every run) go to BENCH_DETAIL_r{N}.json in the
-repo root — NOT onto the stdout line. The driver's stdout capture window is
+repo root, and the same file to BENCH_DETAIL_latest.json (both names carry a
+``_c{cpus}`` tag when $SPARK_GRAFT_CPUS is set; $SPARK_GRAFT_BENCH_ROUND
+sets N) — NOT onto the stdout line. The driver's stdout capture window is
 bounded; r1 and r2 both recorded ``parsed: null`` because the single JSON
 line carried ~93 per-query timings and overflowed it (VERDICT r2 item 1).
 The headline stays well under 500 bytes regardless of how many queries are
@@ -48,9 +50,16 @@ sys.path.insert(0, REPO)
 
 
 def _next_round() -> int:
-    """Infer the current round from driver-written artifacts (the driver
-    writes CORRECTNESS_r{N}/BENCH_r{N} at the END of round N, so the live
-    round is max+1)."""
+    """The current round: ``SPARK_GRAFT_BENCH_ROUND`` when set, otherwise
+    inferred from driver-written artifacts (the driver writes
+    CORRECTNESS_r{N}/BENCH_r{N} at the END of round N, so the live round
+    is max+1). Inference alone drifts whenever the artifacts run ahead
+    of or behind the round that is being measured."""
+    env = os.environ.get("SPARK_GRAFT_BENCH_ROUND", "").strip()
+    if env:
+        if not env.isdigit():
+            raise ValueError(f"SPARK_GRAFT_BENCH_ROUND must be a round number, got {env!r}")
+        return int(env)
     rounds = [0]
     # only driver-written artifacts count — our own BENCH_DETAIL_r* files
     # must not bump the round
@@ -111,6 +120,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_runs_env = os.environ.get("SPARK_GRAFT_BENCH_RUNS")
     n_runs = max(1, int(n_runs_env or "3"))
+    # before the run: a malformed SPARK_GRAFT_BENCH_ROUND fails up front
+    rnd = _next_round()
 
     # The driver parses stdout as JSON (BENCH_r01 recorded parsed:null —
     # JVM/log4j noise had leaked onto fd 1). Point fd 1 at stderr for the
@@ -232,7 +243,6 @@ def main() -> None:
     ok = [t for t in medians.values() if t >= 0]
     total = round(sum(ok), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    rnd = _next_round()
     # Include the core count in the detail filename: the driver runs the
     # bench twice per round (32-core, then an 8-core scaling run), and a
     # round-only name made the second run OVERWRITE the first's per-query
@@ -267,11 +277,14 @@ def main() -> None:
         "data_stats": _data_stats(spark, sf_dir),
         "total_of_medians": total,
     }
-    try:
-        with open(os.path.join(REPO, detail_name), "w") as f:
-            json.dump(detail, f, indent=1, sort_keys=True)
-    except OSError as e:
-        print(f"# bench detail write failed: {e}", file=sys.stderr)
+    # the same detail under a round-free name too, so a reader needs no
+    # round number to find the newest run at a core count
+    for name in (detail_name, f"BENCH_DETAIL_latest{cpu_tag}.json"):
+        try:
+            with open(os.path.join(REPO, name), "w") as f:
+                json.dump(detail, f, indent=1, sort_keys=True)
+        except OSError as e:
+            print(f"# bench detail write failed: {e}", file=sys.stderr)
 
     line = json.dumps(
         {

@@ -160,25 +160,34 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("d.bkt").alias("bkt"),
         F.col("d.val").alias("val"),
     )
+    # NULLs rank LAST, where the oracle's ntile puts them under both ASC
+    # and DESC: a NULL recency (every o_orderdate NULL) is a NULL bucket,
+    # and a NULL monetary_cents (every o_totalprice NULL) is a NULL val
+    # in log_bucket's lowest bucket, which clamps NULL like 1
     rn_w = Window.partitionBy("dim", "bkt").orderBy(
-        F.col("val").asc(), F.col("o_custkey").asc()
+        F.col("val").asc_nulls_last(), F.col("o_custkey").asc()
     )
     ranked = st.withColumn("__rn", F.row_number().over(rn_w))
     # per-(dim, bucket) counts off the ranked frame: identical exchange
     # child, ReuseExchange serves both (operators/ranking.py rationale)
     tiny = ranked.groupBy("dim", "bkt").agg(F.max("__rn").alias("__c"))
     w_off = (
-        Window.partitionBy("dim").orderBy("bkt").rowsBetween(Window.unboundedPreceding, 0)
+        Window.partitionBy("dim")
+        .orderBy(F.col("bkt").asc_nulls_last())
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
     offs = tiny.select(
-        "dim",
-        "bkt",
+        F.col("dim").alias("__odim"),
+        F.col("bkt").alias("__obkt"),
         (F.sum("__c").over(w_off) - F.col("__c")).alias("__off"),
         F.sum("__c").over(Window.partitionBy("dim")).alias("n_total"),
     )
-    idxed = ranked.join(F.broadcast(offs), ["dim", "bkt"]).withColumn(
-        "idx", (F.col("__rn") + F.col("__off")).cast("long")
-    )
+    # NULL-safe on the bucket, as ranking.global_index joins its offsets:
+    # a plain equi-join would drop the NULL bucket's rows
+    idxed = ranked.join(
+        F.broadcast(offs),
+        (F.col("dim") == F.col("__odim")) & F.col("bkt").eqNullSafe(F.col("__obkt")),
+    ).withColumn("idx", (F.col("__rn") + F.col("__off")).cast("long"))
     scored_long = idxed.select(
         "o_custkey", "dim", exact_ntile(5, idx="idx").alias("score")
     )

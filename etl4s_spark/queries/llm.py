@@ -610,12 +610,13 @@ def q_dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale, while the Spark formulation (O(diameter) shuffle sweeps with
     checkpointed lineage) is the one that survives 100 TB.
 
-    Sweep policy: stop at the first no-change sweep. Each sweep is one
-    exchange and one materialization — two Spark jobs, the shuffle-map
-    stage and the checkpoint's result stage — and the checkpoint also
-    observes its changed-label count (operators/graph.py fixpoint), so
-    stopping early costs no extra driver action, and near-dup graphs
-    converge in 2-3 sweeps.
+    Sweep policy: stop at the first no-change sweep, after O(diameter)
+    sweeps: the sf0.1 pair graph (62 pairs, paths of up to 6 nodes)
+    takes 6. A pair set of at most 2^18 rows, like this one, runs those
+    sweeps on the driver after one Arrow collect of its checkpoint; a
+    larger one runs them on Spark, one exchange and two jobs each
+    (operators/dedup.py connected_components) — same labels, same sweep
+    count either way.
     Nonconvergence policy: on_nonconvergence="star" — a pathological
     high-diameter corpus degrades to the O(log n) star contraction
     (same (id, component) contract) instead of raising mid-pipeline."""

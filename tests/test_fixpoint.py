@@ -67,41 +67,45 @@ def test_iterative_operators_accept_an_empty_graph(spark):
         assert out.collect() == [], name
 
 
-def test_connected_components_edge_cases_keep_labels_and_types(spark):
+def test_connected_components_edge_cases_keep_labels_and_types(spark, monkeypatch):
     """Self-loops, NULL endpoints and non-bigint ids: a NULL endpoint
     joins nothing (its row keeps a NULL label), and int / string ids
-    keep their type through the sweeps."""
-    from etl4s_spark.operators.dedup import connected_components
+    keep their type — on the driver finish and through the sweeps."""
+    import etl4s_spark.operators.dedup as dedup
 
     def cc(rows, schema):
-        out = connected_components(spark.createDataFrame(rows, schema))
+        out = dedup.connected_components(spark.createDataFrame(rows, schema))
         got = sorted((tuple(r) for r in out.collect()), key=lambda r: (r[0] is None, r[0]))
         return out.schema.simpleString(), got
 
-    assert cc([(1, 1), (2, 3)], "id_a long, id_b long") == (
-        "struct<id:bigint,component:bigint>",
-        [(1, 1), (2, 2), (3, 2)],
-    )
-    assert cc([(1, None), (2, 3), (None, 4)], "id_a long, id_b long")[1] == [
-        (1, 1), (2, 2), (3, 2), (4, 4), (None, None)
-    ]
-    assert cc([(1, 2), (3, 2)], "id_a int, id_b int") == (
-        "struct<id:int,component:int>",
-        [(1, 1), (2, 1), (3, 1)],
-    )
-    assert cc([("b", "a"), ("c", "b"), ("x", "y")], "id_a string, id_b string") == (
-        "struct<id:string,component:string>",
-        [("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")],
-    )
+    for gate in (dedup.LOCAL_FINISH_MAX_PAIRS, -1):
+        monkeypatch.setattr(dedup, "LOCAL_FINISH_MAX_PAIRS", gate)
+        assert cc([(1, 1), (2, 3)], "id_a long, id_b long") == (
+            "struct<id:bigint,component:bigint>",
+            [(1, 1), (2, 2), (3, 2)],
+        ), gate
+        assert cc([(1, None), (2, 3), (None, 4)], "id_a long, id_b long")[1] == [
+            (1, 1), (2, 2), (3, 2), (4, 4), (None, None)
+        ], gate
+        assert cc([(1, 2), (3, 2)], "id_a int, id_b int") == (
+            "struct<id:int,component:int>",
+            [(1, 1), (2, 1), (3, 1)],
+        ), gate
+        assert cc([("b", "a"), ("c", "b"), ("x", "y")], "id_a string, id_b string") == (
+            "struct<id:string,component:string>",
+            [("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")],
+        ), gate
 
 
 def test_connected_components_sweep_is_two_jobs(spark, monkeypatch):
     """A sweep is one exchange: after the first (which also builds the
     adjacency state), each sweep's materialization is the shuffle-map
     job plus the checkpoint's result job, and nothing else."""
+    import etl4s_spark.operators.dedup as dedup
     import etl4s_spark.operators.graph as graph
-    from etl4s_spark.operators.dedup import connected_components
 
+    # a chain this small finishes on the driver; force the sweeps
+    monkeypatch.setattr(dedup, "LOCAL_FINISH_MAX_PAIRS", -1)
     sc = spark.sparkContext
     materialize, groups = graph.materialize, []
 
@@ -115,12 +119,31 @@ def test_connected_components_sweep_is_two_jobs(spark, monkeypatch):
 
     monkeypatch.setattr(graph, "materialize", grouped)
     chain = spark.createDataFrame([(i, i + 1) for i in range(8)], "id_a long, id_b long")
-    labels = {r.id: r.component for r in connected_components(chain).collect()}
+    labels = {r.id: r.component for r in dedup.connected_components(chain).collect()}
     assert labels == {i: 0 for i in range(9)}
     # label 0 needs 8 sweeps to reach node 8, and a 9th changes nothing
     jobs = [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups]
     assert len(jobs) == 9, jobs
     assert all(n <= 2 for n in jobs[1:]), jobs
+
+
+def test_connected_components_driver_finish_job_budget(spark):
+    """Under the pair-count gate the whole call is the pair relation's
+    checkpoint plus one Arrow collect: the sweeps run on the driver, so
+    no sweep costs a Spark job."""
+    import etl4s_spark.operators.dedup as dedup
+
+    sc = spark.sparkContext
+    chain = spark.createDataFrame([(i, i + 1) for i in range(8)], "id_a long, id_b long")
+    assert dedup.LOCAL_FINISH_MAX_PAIRS >= 8
+    sc.setJobGroup("cc_driver_finish", "connected_components driver finish")
+    try:
+        out = dedup.connected_components(chain)
+    finally:
+        sc.setJobGroup(None, None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("cc_driver_finish"))
+    assert n_jobs <= 3, n_jobs
+    assert {r.id: r.component for r in out.collect()} == {i: 0 for i in range(9)}
 
 
 def test_operators_never_set_the_checkpoint_dir():

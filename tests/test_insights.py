@@ -110,6 +110,42 @@ def test_attribution_touch_edge_semantics(spark, tmp_path):
     }
 
 
+def test_rfm_segmentation_scores_customers_with_null_orders(spark, tmp_path):
+    """Customers whose only order has a NULL o_totalprice or a NULL
+    o_orderdate still get all three scores and are counted once, and
+    both rank LAST on their dimension, as the DuckDB oracle's ntile puts
+    NULLs. A NULL date gives a NULL recency bucket, which the offset
+    join must match NULL-safely; a NULL price clamps into the lowest
+    monetary bucket, where it must sort after the 1-cent customer."""
+    import duckdb
+
+    from etl4s_spark.queries import ORACLES, QUERIES, load_all
+    from tests.conftest import compare_to_oracle
+
+    load_all()
+    day = datetime.datetime(2024, 1, 1)
+    rows = [
+        (k, 1 + k % 5, float(100 * k), day + datetime.timedelta(days=20 * k))
+        for k in range(1, 11)
+    ]
+    rows += [
+        (11, 6, 0.01, day + datetime.timedelta(days=5)),
+        (12, 7, None, day + datetime.timedelta(days=190)),
+        (13, 8, 50.0, None),
+    ]
+    d = tmp_path / "sf"
+    spark.createDataFrame(
+        rows, "o_orderkey long, o_custkey long, o_totalprice double, o_orderdate timestamp"
+    ).write.parquet(str(d / "orders.parquet"))
+    out = QUERIES["q_rfm_segmentation"](spark, str(d))
+    got = out.collect()
+    assert all(None not in (r.r_score, r.f_score, r.m_score) for r in got), got
+    assert sum(r.n_customers for r in got) == 8
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM '{d}/orders.parquet/*.parquet'")
+    compare_to_oracle(out, con, ORACLES["q_rfm_segmentation"])
+
+
 def test_gaps_islands_splits_on_gap(spark, tmp_path):
     """Days 1,2,3 then 5,6,7,8 → two islands; the 1-day gap splits, the
     3-day streak passes the >=3 filter, a lone day 20 does not."""

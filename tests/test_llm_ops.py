@@ -507,12 +507,13 @@ def test_connected_components_and_canonical_dedup(spark):
     assert set(ccomp.values()) == {10} and len(ccomp) == 11
 
 
-def test_connected_components_contracted(spark):
+def test_connected_components_contracted(spark, monkeypatch):
     """min_neighbor_contract + contracted CC return bit-identical labels
     to plain connected_components on every graph shape: cliques (the
     dense case the contraction exists for — contracts to ZERO edges and
     skips the iterative machinery), chains (residue left → iterative CC
     runs on the contracted graph), and mixtures."""
+    import etl4s_spark.operators.dedup as dedup
     from etl4s_spark.operators.dedup import (
         connected_components,
         connected_components_contracted,
@@ -550,14 +551,18 @@ def test_connected_components_contracted(spark):
     assert set(cc.values()) == {40} and len(cc) == 13
 
     # cc_kwargs pass through to the CC on the contracted graph: a
-    # sufficient sweep budget changes nothing, a too-small one raises
-    budgeted = {
-        r.id: r.component
-        for r in connected_components_contracted(pairs, max_iter=3).collect()
-    }
-    assert budgeted == plain
-    with pytest.raises(RuntimeError, match="not converged"):
-        connected_components_contracted(chain, max_iter=1)
+    # sufficient sweep budget changes nothing, a too-small one raises —
+    # on the driver finish and through the sweeps
+    for gate in (dedup.LOCAL_FINISH_MAX_PAIRS, -1):
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "LOCAL_FINISH_MAX_PAIRS", gate)
+            budgeted = {
+                r.id: r.component
+                for r in connected_components_contracted(pairs, max_iter=3).collect()
+            }
+            assert budgeted == plain, gate
+            with pytest.raises(RuntimeError, match="not converged"):
+                connected_components_contracted(chain, max_iter=1)
 
     # self-loop-only nodes (ADVICE r6): a node appearing only as (a, a)
     # must survive as a singleton — plain CC keeps it, the contraction's
@@ -573,7 +578,7 @@ def test_connected_components_contracted(spark):
     assert contr_l[70] == 70 and contr_l[60] == 60
 
 
-def test_connected_components_random_graphs_vs_union_find(spark):
+def test_connected_components_random_graphs_vs_union_find(spark, monkeypatch):
     """Fixed-seed random graphs across the density spectrum: plain
     min-label CC, the contraction pre-pass variant, AND the
     large-star/small-star variant all match an independent pure-Python
@@ -585,11 +590,19 @@ def test_connected_components_random_graphs_vs_union_find(spark):
     fuzzy match) emit both."""
     import random
 
+    import etl4s_spark.operators.dedup as dedup
     from etl4s_spark.operators.dedup import (
         connected_components,
         connected_components_contracted,
         connected_components_star,
     )
+
+    def plain_sweeps(pairs):
+        # these graphs are small enough for the driver finish: force the
+        # distributed sweeps too
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "LOCAL_FINISH_MAX_PAIRS", -1)
+            return connected_components(pairs)
 
     def uf_min_labels(edges):
         parent = {}
@@ -634,47 +647,53 @@ def test_connected_components_random_graphs_vs_union_find(spark):
         noisy = edges + [(b, a) for a, b in edges[:: max(1, len(edges) // 7)]]
         noisy += edges[:: max(1, len(edges) // 5)]
         pairs = spark.createDataFrame(noisy, "id_a long, id_b long")
-        for name, got_df in [
-            ("plain", connected_components(pairs)),
-            ("contracted", connected_components_contracted(pairs)),
-            ("star", connected_components_star(pairs)),
+        for name, cc in [
+            ("plain", connected_components),
+            ("plain sweeps", plain_sweeps),
+            ("contracted", connected_components_contracted),
+            ("star", connected_components_star),
         ]:
-            got = {r.id: r.component for r in got_df.collect()}
+            got = {r.id: r.component for r in cc(pairs).collect()}
             assert got == want, f"graph {gi} via {name} diverges from union-find"
 
 
-def test_connected_components_modes(spark, tmp_path):
+def test_connected_components_modes(spark, tmp_path, monkeypatch):
     """Non-convergence / reliable-checkpoint contract (VERDICT r2 item 5,
-    ADVICE r2 medium)."""
+    ADVICE r2 medium), on the driver finish and through the sweeps."""
     import os
 
-    from etl4s_spark.operators.dedup import connected_components
+    import etl4s_spark.operators.dedup as dedup
 
     # two cliques + a bridge: diameter 2 → converges in <= 3 sweeps
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (4, 6), (10, 11)],
         "id_a long, id_b long",
     )
-    local = {r.id: r.component for r in connected_components(pairs).collect()}
-
-    # the sweep budget raises instead of returning partial labels
     chain = spark.createDataFrame([(i, i + 1) for i in range(20, 28)], "id_a long, id_b long")
-    with pytest.raises(RuntimeError, match="not converged"):
-        connected_components(chain, max_iter=2)
-
-    # reliable checkpoint mode comes from the session's checkpoint dir:
-    # same labels, files land there
     sc = spark.sparkContext
-    ckpt = str(tmp_path / "cc_ckpt")
-    sc.setCheckpointDir(ckpt)
-    try:
-        reliable = {r.id: r.component for r in connected_components(pairs).collect()}
-    finally:
-        # unset it so later tests keep local checkpoints
-        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
-    assert sc.getCheckpointDir() is None
-    assert reliable == local
-    assert any(os.scandir(ckpt))
+    for gate in (dedup.LOCAL_FINISH_MAX_PAIRS, -1):
+        monkeypatch.setattr(dedup, "LOCAL_FINISH_MAX_PAIRS", gate)
+        local = {r.id: r.component for r in dedup.connected_components(pairs).collect()}
+
+        # the sweep budget raises instead of returning partial labels
+        with pytest.raises(RuntimeError, match="not converged"):
+            dedup.connected_components(chain, max_iter=2)
+
+        # reliable checkpoint mode comes from the session's checkpoint dir:
+        # same labels, files land there (on the driver finish, the pair
+        # relation's checkpoint)
+        ckpt = str(tmp_path / f"cc_ckpt_{gate}")
+        sc.setCheckpointDir(ckpt)
+        try:
+            reliable = {
+                r.id: r.component for r in dedup.connected_components(pairs).collect()
+            }
+        finally:
+            # unset it so later tests keep local checkpoints
+            getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+        assert sc.getCheckpointDir() is None
+        assert reliable == local, gate
+        assert any(os.scandir(ckpt)), gate
 
 
 def test_connected_components_star_matches_minlabel(spark):
